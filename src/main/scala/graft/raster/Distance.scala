@@ -378,6 +378,9 @@ object Distance {
     var frontierRows = 1L
     var done = false
     var rounds = 0
+    // squared table of the previous iteration: its square (this
+    // iteration's jump) materializes only in this iteration's count
+    var prevJump2: org.apache.spark.rdd.RDD[(Long, (Long, Long))] = null
     while (!done && rounds < 48) { // 2^48 hops: unreachable backstop
       // TWO doubling steps ride each materialization. Invariant:
       // entering with frontier = chain nodes at < 2^k hops and jump =
@@ -415,6 +418,11 @@ object Distance {
       grown.count() // eager: runs both steps and fills the accumulators
       done = acc2.value == 0
       frontierRows += acc1.value + acc2.value
+      // grown and jump2 are materialized: the round's inputs are spent
+      frontier.unpersist(blocking = false)
+      jump.unpersist(blocking = false)
+      if (prevJump2 != null) prevJump2.unpersist(blocking = false)
+      prevJump2 = jump2
       frontier = grown
       // the next iteration's frontier spans < 2^{k+2} hops, so it
       // needs 2^{k+2} jumps: square AGAIN (lazy — never materialized
@@ -440,6 +448,8 @@ object Distance {
       }
       rounds += 2
     }
+    jump.unpersist(blocking = false)
+    if (prevJump2 != null) prevJump2.unpersist(blocking = false)
     frontier.toDF("node", "seq")
       .join(cells, col("node") === cells("id"))
       .select(col("seq"), col("x"), col("y"),

@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions._
   * edge or NoData holes) coalesce to a -inf sentinel and can never
   * win the cascade.
   */
-object Hydrology {
+// Serializable: the tile-walk closures call the shared d8Code/walkTile
+// helpers, so executor lambdas capture this (stateless) singleton
+object Hydrology extends Serializable {
 
   /** (dx, dy, ESRI code) in ascending code order — the tie cascade. */
   val Dirs: Seq[(Int, Int, Int)] = Seq(
@@ -49,39 +51,15 @@ object Hydrology {
     import spark.implicits._
     val tl = layer.meta.layout.tileLayout
     val (tc, tr) = (tl.tileCols, tl.tileRows)
-    val dirs = Dirs.toArray
     Focal.gatherPartials[(Long, Long, Long)](layer, 1) { (c0, r0, padded, w) =>
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
       var j = 0
       while (j < tr) {
         var i = 0
         while (i < tc) {
-          val zc = padded((j + 1) * w + (i + 1))
-          if (!zc.isNaN) {
-            val drops = new Array[Double](dirs.length)
-            var k = 0
-            var best = Double.NegativeInfinity
-            while (k < dirs.length) {
-              val (dx, dy, _) = dirs(k)
-              val nz = padded((j + 1 + dy) * w + (i + 1 + dx))
-              val d =
-                if (nz.isNaN) Sentinel
-                else (zc - nz) / (if (dx != 0 && dy != 0) math.sqrt(2.0) else 1.0)
-              drops(k) = d
-              if (d > best) best = d
-              k += 1
-            }
-            var code = 0L
-            if (best > 0) {
-              k = 0
-              var found = false
-              while (k < dirs.length && !found) {
-                if (drops(k) == best) { code = dirs(k)._3.toLong; found = true }
-                k += 1
-              }
-            }
-            out += ((c0.toLong * tc + i, r0.toLong * tr + j, code))
-          }
+          val p = (j + 1) * w + (i + 1)
+          if (!padded(p).isNaN)
+            out += ((c0.toLong * tc + i, r0.toLong * tr + j, d8Code(padded, w, p).toLong))
           i += 1
         }
         j += 1
@@ -90,19 +68,60 @@ object Hydrology {
     }.toDF("x", "y", "dir")
   }
 
+  private val DirDx = Dirs.map(_._1).toArray
+  private val DirDy = Dirs.map(_._2).toArray
+  private val DirCode = Dirs.map(_._3).toArray
+
+  /** The D8 cascade for the non-NaN cell at index `p` of a radius-1
+    * padded window of width `w`: steepest (zc−nz)/dist drop, first
+    * code in ascending order on ties, 0 without a positive drop. NaN
+    * neighbors take the Sentinel drop. The one copy behind
+    * [[flowDirectionLayer]] and the tile walk of [[resolveTiled]]. */
+  private def d8Code(padded: Array[Double], w: Int, p: Int): Int = {
+    val zc = padded(p)
+    val drops = new Array[Double](8)
+    var k = 0
+    var best = Double.NegativeInfinity
+    while (k < 8) {
+      val dx = DirDx(k); val dy = DirDy(k)
+      val nz = padded(p + dy * w + dx)
+      val d =
+        if (nz.isNaN) Sentinel
+        else (zc - nz) / (if (dx != 0 && dy != 0) math.sqrt(2.0) else 1.0)
+      drops(k) = d
+      if (d > best) best = d
+      k += 1
+    }
+    var code = 0
+    if (best > 0) {
+      k = 0
+      while (k < 8 && code == 0) {
+        if (drops(k) == best) code = DirCode(k)
+        k += 1
+      }
+    }
+    code
+  }
+
   /** @param cells (x, y, v) elevation grid; absent cells are NoData
     * @return (x, y, dir) — dir 0 for pits/flats.
     * Delegates to [[flowDirectionLayer]]: the cells tile into 64-px
     * tiles first, so the D8 scan runs tile-local with a halo instead
     * of exploding 9 rows per cell into a grid-keyed exchange. */
-  def flowDirection(cells: DataFrame, gridCols: Long, gridRows: Long): DataFrame = {
+  def flowDirection(cells: DataFrame, gridCols: Long, gridRows: Long): DataFrame =
+    flowDirectionLayer(demLayer(cells, gridCols, gridRows))
+
+  /** The in-grid cells of an (x, y, v) elevation grid in 64-px tiles
+    * (duplicate cells keep the max) — the tiling every D8 operator
+    * here scans. */
+  private def demLayer(cells: DataFrame, gridCols: Long, gridRows: Long): RasterLayer = {
     val T = 64
     val layout = graft.core.LayoutDefinition(
       graft.core.Extent(0, 0, gridCols.toDouble, gridRows.toDouble),
       graft.core.TileLayout(((gridCols + T - 1) / T).toInt, ((gridRows + T - 1) / T).toInt, T, T))
     val inGrid = cells.where(col("x") >= 0 && col("x") < gridCols &&
       col("y") >= 0 && col("y") < gridRows)
-    flowDirectionLayer(RasterLayer.fromCells(inGrid, layout, CellOp.Max))
+    RasterLayer.fromCells(inGrid, layout, CellOp.Max)
   }
 
   /** Pit fill (geotrellis raster.hydrology Fill semantics, single
@@ -259,41 +278,38 @@ object Hydrology {
       .select(col("x"), col("y"), coalesce(col("cnt"), lit(0L)).cast("long").as("acc"))
   }
 
-  /** (from, to) linear-id out-edges of the D8 graph — one per non-pit
-    * cell (shared by accumulation / watershed / stream order). */
-  private def d8Edges(dirs: DataFrame, gridCols: Long): DataFrame =
+  /** (from, to, extra…) linear-id out-edges of the D8 graph — one per
+    * non-pit cell (shared by watershed / flow length / stream order). */
+  private def d8Edges(dirs: DataFrame, gridCols: Long, extra: Column*): DataFrame =
     dirs.where(col("dir") =!= 0)
-      .select((col("y") * gridCols + col("x")).as("from"),
+      .select(Seq((col("y") * gridCols + col("x")).as("from"),
         Dirs.map { case (dx, dy, code) =>
           when(col("dir") === code,
             (col("y") + dy) * gridCols + (col("x") + dx))
-        }.reduce(coalesce(_, _)).as("to"))
+        }.reduce(coalesce(_, _)).as("to")) ++ extra: _*)
 
   /** Watershed labeling (ESRI Basin semantics): every cell takes the
     * linear id of the PIT its D8 flow path terminates in; pits label
     * themselves. Basins partition the grid into drainage areas.
     *
-    * Scale shape: pointer DOUBLING over the single-out-edge flow graph
-    * — each round joins the successor table with itself
-    * (`succ = succ o succ`), so a depth-D flow path resolves in
-    * ceil(log2 D) rounds, not D (flowAccumulation walks rounds = depth
-    * because it must VISIT every cell on the way; a basin label only
-    * needs the endpoint, which is exactly what doubling shortcuts).
-    * Each round is one equi-join + localCheckpoint; convergence is a
-    * count on the checkpointed result (a pointer is final when its
-    * target is final). Small graphs take the guarded driver walk with
+    * Scale shape: [[resolveTiled]] — each 64-px tile walks its cells'
+    * flow paths to an in-tile pit or to the first cell past the tile
+    * edge, and only the tile-border cells pointer-double across
+    * tiles (a basin label only needs the path's endpoint, which is
+    * exactly what doubling shortcuts). Graphs of at most
+    * `maxDriverEdges` out-edges take the guarded driver walk with
     * path memoization (flowAccumulation precedent).
     */
   def watershed(cells: DataFrame, gridCols: Long, gridRows: Long,
-                maxDriverEdges: Long = 1L << 22): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
-    val edge = d8Edges(dirs, gridCols).localCheckpoint()
-    val id = col("y") * gridCols + col("x")
-    if (edge.count() <= maxDriverEdges) {
+                maxDriverEdges: Long = 1L << 22): DataFrame =
+    resolveTiled(cells, gridCols, gridRows, maxDriverEdges, "ws", "basin",
+        withDistance = false).getOrElse {
+      val spark = cells.sparkSession
+      import spark.implicits._
+      val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
+      val id = col("y") * gridCols + col("x")
       val next = new mutable.HashMap[Long, Long]()
-      edge.as[(Long, Long)].collect().foreach { case (f, t) => next(f) = t }
+      d8Edges(dirs, gridCols).as[(Long, Long)].collect().foreach { case (f, t) => next(f) = t }
       // iterative memoized walk (recursion could deepen past the JVM
       // stack on long channels): unwind each path onto a list first
       val term = new mutable.HashMap[Long, Long]()
@@ -308,51 +324,10 @@ object Hydrology {
         path.foreach(c => term(c) = basin)
       }
       val lab = broadcast(term.toSeq.toDF("id", "basin"))
-      return dirs.join(lab, id === lab("id"), "left")
+      dirs.join(lab, id === lab("id"), "left")
         .select(col("x"), col("y"),
           coalesce(col("basin"), id).cast("long").as("basin"))
     }
-    // succ(c) = out-edge target, or self for pits — total function, so
-    // doubling composes cleanly.
-    // r21 (guide §8 — the Pregel shape): the doubling runs on a KEYED
-    // RDD under a sticky HashPartitioner; each round re-keys the table
-    // by its pointer (the one shuffle), composes through a NARROW
-    // co-partitioned join, and re-keys back. One job per round, no
-    // per-round SQL planning/codegen; the changed-pointer probe rides
-    // the materialization as an accumulator exactly as before.
-    val part = new org.apache.spark.HashPartitioner(math.max(1,
-      math.min(spark.sparkContext.defaultParallelism.toLong,
-        gridCols * gridRows / 65536L + 1L)).toInt)
-    var succ: org.apache.spark.rdd.RDD[(Long, Long)] =
-      dirs.join(edge, id === edge("from"), "left")
-        .select(id.as("id"), coalesce(col("to"), id).as("nxt"))
-        .as[(Long, Long)].rdd.partitionBy(part)
-    succ.localCheckpoint()
-    var round = 0
-    var done = false
-    while (!done) {
-      require(round < 64, "watershed: pointer doubling exceeded 64 rounds — " +
-        "the flow graph has a cycle, which strict-descent D8 cannot produce")
-      // changed-pointer count rides the checkpoint materialization as
-      // an accumulator (r20): retries only inflate -> at worst one
-      // extra (idempotent) round; zero is a real fixpoint.
-      val chgAcc = spark.sparkContext.longAccumulator(s"graft_ws_chg_$round")
-      val next = succ.map { case (i, n) => (n, i) }
-        .partitionBy(part)
-        .join(succ, part) // narrow: co-partitioned
-        .map { case (n, (i, n2)) => if (n2 != n) chgAcc.add(1); (i, n2) }
-        .partitionBy(part)
-      next.localCheckpoint()
-      next.count() // eager: runs the round and fills the accumulator
-      val prev = succ
-      succ = next
-      prev.unpersist(blocking = false)
-      done = chgAcc.value == 0
-      round += 1
-    }
-    dirs.join(succ.toDF("id", "nxt"), id === col("id"))
-      .select(col("x"), col("y"), col("nxt").cast("long").as("basin"))
-  }
 
   /** Downstream flow length (ESRI FlowLength, downstream direction):
     * per cell, the total path length along D8 flow directions to its
@@ -363,32 +338,25 @@ object Hydrology {
     * `dist_q` in micro-cells and the oracle's recursive CTE sums the
     * same integers (no floats anywhere).
     *
-    * Scale shape: pointer doubling ACCUMULATING distance — state
-    * (id, nxt, dq) with dq = distance from id to nxt; each round
-    * dq += dq(nxt), nxt = nxt² — a depth-D path resolves in log2 D
-    * joins (the [[watershed]] discipline, carrying a sum instead of
-    * just the endpoint). Guarded driver walk with suffix-sum
-    * memoization below `maxDriverEdges`. */
+    * Scale shape: [[resolveTiled]] carrying a sum — each tile walk
+    * keeps the distance up to its path's tile exit, and the border
+    * doubling adds the exact integer distances of the hops it
+    * shortcuts (the [[watershed]] discipline). Guarded driver walk
+    * with suffix-sum memoization below `maxDriverEdges`. */
   def flowLength(cells: DataFrame, gridCols: Long, gridRows: Long,
-                 maxDriverEdges: Long = 1L << 22): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val StepQ = 1000000L; val DiagQ = 1414214L // round(sqrt(2) * 1e6)
-    val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
-    val id = col("y") * gridCols + col("x")
-    val wq = Dirs.map { case (dx, dy, code) =>
-      when(col("dir") === code, lit(if (dx != 0 && dy != 0) DiagQ else StepQ))
-    }.reduce(coalesce(_, _))
-    val edge = dirs.where(col("dir") =!= 0)
-      .select(id.as("from"),
-        Dirs.map { case (dx, dy, code) =>
-          when(col("dir") === code, (col("y") + dy) * gridCols + (col("x") + dx))
-        }.reduce(coalesce(_, _)).as("to"),
-        wq.as("wq"))
-      .localCheckpoint()
-    if (edge.count() <= maxDriverEdges) {
+                 maxDriverEdges: Long = 1L << 22): DataFrame =
+    resolveTiled(cells, gridCols, gridRows, maxDriverEdges, "fl", "dist_q",
+        withDistance = true).getOrElse {
+      val spark = cells.sparkSession
+      import spark.implicits._
+      val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
+      val id = col("y") * gridCols + col("x")
+      val wq = Dirs.map { case (dx, dy, code) =>
+        when(col("dir") === code, lit(if (dx != 0 && dy != 0) DiagQ else StepQ))
+      }.reduce(coalesce(_, _))
       val next = new mutable.HashMap[Long, (Long, Long)]() // from -> (to, wq)
-      edge.as[(Long, Long, Long)].collect().foreach { case (f, t, w) => next(f) = (t, w) }
+      d8Edges(dirs, gridCols, wq.as("wq"))
+        .as[(Long, Long, Long)].collect().foreach { case (f, t, w) => next(f) = (t, w) }
       val dist = new mutable.HashMap[Long, Long]()
       next.keysIterator.foreach { start =>
         var path = List.empty[Long] // head = deepest unresolved node
@@ -401,49 +369,210 @@ object Hydrology {
         path.foreach { c => d += next(c)._2; dist(c) = d }
       }
       val lab = broadcast(dist.toSeq.toDF("id", "dq"))
-      return dirs.join(lab, id === lab("id"), "left")
+      dirs.join(lab, id === lab("id"), "left")
         .select(col("x"), col("y"), coalesce(col("dq"), lit(0L)).cast("long").as("dist_q"))
     }
-    // r21: distance-accumulating pointer doubling on KEYED RDDs (guide
-    // §8 — see watershed): re-key by pointer, compose + sum through a
-    // narrow co-partitioned join, re-key back; one job per round.
+
+  /** Micro-cell step lengths of [[flowLength]]: 1e6 cardinal,
+    * round(√2 · 1e6) diagonal. */
+  private val StepQ = 1000000L
+  private val DiagQ = 1414214L
+
+  // tile-walk cell states: no cell (NoData or beyond the grid), and a
+  // path that ends at an in-tile pit; any other exit is a cell id
+  private val NoCell = -2L
+  private val Terminal = -1L
+
+  /** Distributed resolution of a single-out-edge D8 path problem —
+    * every cell's value is the sum of its path's step weights plus the
+    * value of the pit the path ends in ([[watershed]]: weights 0, pit
+    * value = pit id; [[flowLength]]: micro-cell steps, pit value 0).
+    * Returns None when the graph has at most `maxDriverEdges` out-edges
+    * (the caller's driver walk then runs): edges never outnumber grid
+    * cells, so a grid of at most that many cells needs no count.
+    *
+    * Scale shape (the Barnes 2017 tile-local + boundary-graph scheme,
+    * iterated in the Pregel shape):
+    *  1. One radius-1 halo pass ([[Focal.gatherPartials]] over the
+    *     64-px tiling of [[flowDirection]]): each tile runs the
+    *     [[d8Code]] cascade and walks every cell's path, iteratively
+    *     and memoized, until an in-tile pit (terminal: final value) or
+    *     the first cell past the tile edge (exit: that cell's id and
+    *     the weight so far). Exits always land on a neighbor tile's
+    *     border ring. The tile states (16 B per cell) are pinned: both
+    *     steps below read them, and their exact edge count feeds the
+    *     guard.
+    *  2. Pointer doubling over the tile-border cells only (~6% of the
+    *     cells at 64 px): keyed RDDs under one sticky HashPartitioner,
+    *     open rows re-key by their exit, compose through a narrow
+    *     co-partitioned join and re-key back. A checkpoint per round;
+    *     the count of rows still open rides its materialization as a
+    *     `graft_<tag>_open_<round>` accumulator (retries only inflate:
+    *     a spurious nonzero costs one idempotent round, zero is the
+    *     fixpoint); the previous round unpersists; 64 rounds are the
+    *     cycle backstop.
+    *  3. One halo exchange back: each resolved border value ships to
+    *     the (at most three) tiles whose radius-1 ring holds it, and
+    *     every tile relabels its exits locally. Per-cell rows never
+    *     cross an exchange.
+    * @return (x, y, `valueCol`) — one row per in-grid data cell */
+  private def resolveTiled(cells: DataFrame, gridCols: Long, gridRows: Long,
+                           maxDriverEdges: Long, tag: String, valueCol: String,
+                           withDistance: Boolean): Option[DataFrame] = {
+    if (gridCols * gridRows <= maxDriverEdges) return None
+    val spark = cells.sparkSession
+    import spark.implicits._
+    val dem = demLayer(cells, gridCols, gridRows)
+    val tl = dem.meta.layout.tileLayout
+    val (tc, tr, lc, lr) = (tl.tileCols, tl.tileRows, tl.layoutCols, tl.layoutRows)
     val part = new org.apache.spark.HashPartitioner(math.max(1,
       math.min(spark.sparkContext.defaultParallelism.toLong,
         gridCols * gridRows / 65536L + 1L)).toInt)
-    var succ: org.apache.spark.rdd.RDD[(Long, (Long, Long))] =
-      dirs.join(edge, id === edge("from"), "left")
-        .select(id.as("id"), coalesce(col("to"), id).as("nxt"),
-          coalesce(col("wq"), lit(0L)).as("dq"))
-        .as[(Long, Long, Long)].rdd
-        .map { case (i, n, d) => (i, (n, d)) }
-        .partitionBy(part)
-    succ.localCheckpoint()
+    // 1. tile walks, keyed by tile index r0 * lc + c0 (tiles without a
+    // data cell — halo-only neighbors of present tiles — emit nothing)
+    val tiles = Focal.gatherPartials[(Long, Array[Long], Array[Long], Long)](dem, 1) {
+        (c0, r0, padded, w) =>
+          val (exit, acc, edges) = walkTile(c0, r0, padded, w, tc, tr, gridCols, withDistance)
+          if (exit.forall(_ == NoCell)) Iterator.empty
+          else Iterator((r0.toLong * lc + c0, exit, acc, edges))
+      }.rdd.map { case (t, exit, acc, edges) => (t, (exit, acc, edges)) }.partitionBy(part)
+    tiles.localCheckpoint()
+    val edges = tiles.map(_._2._3).fold(0L)(_ + _) // exact; materializes the pin
+    if (edges <= maxDriverEdges) {
+      tiles.unpersist(blocking = false)
+      return None
+    }
+    // 2. border doubling: (id, (exit or Terminal, value so far))
+    var st: org.apache.spark.rdd.RDD[(Long, (Long, Long))] =
+      tiles.flatMap { case (t, (exit, acc, _)) =>
+        val (c0, r0) = ((t % lc).toInt, (t / lc).toInt)
+        (0 until tc * tr).iterator.filter { k =>
+          val (i, j) = (k % tc, k / tc)
+          exit(k) != NoCell && (i == 0 || j == 0 || i == tc - 1 || j == tr - 1)
+        }.map { k =>
+          ((r0.toLong * tr + k / tc) * gridCols + c0.toLong * tc + k % tc, (exit(k), acc(k)))
+        }
+      }.partitionBy(part)
+    st.localCheckpoint()
     var round = 0
-    var done = false
-    while (!done) {
-      require(round < 64, "flowLength: pointer doubling exceeded 64 rounds — " +
+    var open = true
+    while (open) {
+      require(round < 64, s"$tag: border pointer doubling exceeded 64 rounds — " +
         "the flow graph has a cycle, which strict-descent D8 cannot produce")
-      // changed-pointer count rides the checkpoint materialization
-      // (r20, see watershed)
-      val chgAcc = spark.sparkContext.longAccumulator(s"graft_fl_chg_$round")
-      val next = succ.map { case (i, (n, d)) => (n, (i, d)) }
+      val openAcc = spark.sparkContext.longAccumulator(s"graft_${tag}_open_$round")
+      val cur = st
+      val hop = cur.filter(_._2._1 >= 0)
+        .map { case (i, (e, a)) => (e, (i, a)) }
         .partitionBy(part)
-        .join(succ, part) // narrow: co-partitioned
-        .map { case (n, ((i, d), (n2, d2))) =>
-          if (n2 != n) chgAcc.add(1); (i, (n2, d + d2)) }
+        .join(cur, part) // narrow: co-partitioned
+        .map { case (_, ((i, a), (e2, a2))) => if (e2 >= 0) openAcc.add(1); (i, (e2, a + a2)) }
         .partitionBy(part)
+      val next = cur.filter(_._2._1 < 0).union(hop) // partitioner-aware: narrow
       next.localCheckpoint()
       next.count() // eager: runs the round and fills the accumulator
-      val prev = succ
-      succ = next
-      prev.unpersist(blocking = false)
-      done = chgAcc.value == 0
+      st = next
+      cur.unpersist(blocking = false)
+      open = openAcc.value != 0
       round += 1
     }
-    dirs.join(
-        succ.map { case (i, (_, d)) => (i, d) }.toDF("id", "dq"),
-        id === col("id"))
-      .select(col("x"), col("y"), col("dq").cast("long").as("dist_q"))
+    // 3. resolved border values back to the tiles whose halo holds them
+    val halo = st.flatMap { case (id, (_, v)) =>
+      val (x, y) = (id % gridCols, id / gridCols)
+      val (tx, ty, i, j) = (x / tc, y / tr, (x % tc).toInt, (y % tr).toInt)
+      for {
+        dy <- (if (j == 0) -1 else 0) to (if (j == tr - 1) 1 else 0)
+        dx <- (if (i == 0) -1 else 0) to (if (i == tc - 1) 1 else 0)
+        if (dx != 0 || dy != 0) && tx + dx >= 0 && tx + dx < lc && ty + dy >= 0 && ty + dy < lr
+      } yield ((ty + dy) * lc + tx + dx, (id, v))
+    }
+    val out = tiles.cogroup(halo, part).flatMap { case (t, (states, ring)) =>
+      val (c0, r0) = ((t % lc).toInt, (t / lc).toInt)
+      val resolved = new mutable.LongMap[Long]()
+      ring.foreach { case (id, v) => resolved(id) = v }
+      states.iterator.flatMap { case (exit, acc, _) =>
+        (0 until tc * tr).iterator.filter(exit(_) != NoCell).map { k =>
+          val v = if (exit(k) == Terminal) acc(k)
+            else acc(k) + resolved.getOrElse(exit(k),
+              throw new IllegalStateException(s"$tag: exit ${exit(k)} of tile $t never resolved"))
+          (c0.toLong * tc + k % tc, r0.toLong * tr + k / tc, v)
+        }
+      }
+    }
+    Some(out.toDF("x", "y", valueCol))
+  }
+
+  /** Step 1 of [[resolveTiled]] for tile (c0, r0): the [[d8Code]] of
+    * every cell of its radius-1 padded window, then each cell's path
+    * walked until an in-tile pit or the tile edge. The walk is
+    * iterative with an explicit stack and memoized: a path stops at
+    * the first already-resolved cell and unwinds onto it.
+    * @return per cell (row-major) the exit — NoCell, Terminal, or the
+    *         id of the first cell past the tile edge — and the value so
+    *         far (the final value when Terminal); plus the tile's
+    *         out-edge (non-pit cell) count */
+  private def walkTile(c0: Int, r0: Int, padded: Array[Double], w: Int, tc: Int, tr: Int,
+                       gridCols: Long, withDistance: Boolean): (Array[Long], Array[Long], Long) = {
+    val n = tc * tr
+    val code = new Array[Int](n)
+    val exit = new Array[Long](n)
+    val acc = new Array[Long](n)
+    val done = new Array[Boolean](n)
+    def id(i: Int, j: Int): Long = (r0.toLong * tr + j) * gridCols + c0.toLong * tc + i
+    def weight(c: Int): Long =
+      if (!withDistance) 0L
+      else if ((c & (2 | 8 | 32 | 128)) != 0) DiagQ else StepQ
+    var edges = 0L
+    var k = 0
+    while (k < n) {
+      val p = (k / tc + 1) * w + (k % tc + 1)
+      if (padded(p).isNaN) { exit(k) = NoCell; done(k) = true }
+      else {
+        code(k) = d8Code(padded, w, p)
+        if (code(k) != 0) edges += 1
+      }
+      k += 1
+    }
+    val stack = new Array[Int](n)
+    k = 0
+    while (k < n) {
+      var top = 0
+      var cur = k
+      var base = -1 // the resolved cell the stacked path unwinds onto
+      while (base < 0) {
+        if (done(cur)) base = cur
+        else if (code(cur) == 0) {
+          exit(cur) = Terminal
+          acc(cur) = if (withDistance) 0L else id(cur % tc, cur / tc)
+          done(cur) = true
+          base = cur
+        } else {
+          val d = Integer.numberOfTrailingZeros(code(cur))
+          val i = cur % tc + DirDx(d)
+          val j = cur / tc + DirDy(d)
+          if (i >= 0 && i < tc && j >= 0 && j < tr) {
+            require(top < n, "flow path revisits a cell — strict-descent D8 has no cycles")
+            stack(top) = cur
+            top += 1
+            cur = j * tc + i
+          } else {
+            exit(cur) = id(i, j)
+            acc(cur) = weight(code(cur))
+            done(cur) = true
+            base = cur
+          }
+        }
+      }
+      while (top > 0) {
+        top -= 1
+        val q = stack(top)
+        exit(q) = exit(base)
+        acc(q) = weight(code(q)) + acc(base)
+        done(q) = true
+        base = q
+      }
+      k += 1
+    }
+    (exit, acc, edges)
   }
 
   /** Strahler stream order over the full D8 drainage forest (Strahler

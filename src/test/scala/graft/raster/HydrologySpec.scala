@@ -136,6 +136,12 @@ class HydrologySpec extends SparkSpec {
         maxDriverEdges = 0)
       .as[(Long, Long, Long)].collect().toSet
     assert(byDoubling == byDriver && byDriver.nonEmpty)
+    // 16 grid cells > 5 but 3 out-edges <= 5: the tile pass's exact
+    // edge count hands the graph back to the driver walk
+    val byGuard = Hydrology.watershed(twoBasins.toDF("x", "y", "v"), 4, 4,
+        maxDriverEdges = 5)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(byGuard == byDriver)
   }
 
   test("flow length: cardinal + diagonal micro-cell sums, pits zero, doubling == driver") {
@@ -151,6 +157,71 @@ class HydrologySpec extends SparkSpec {
         maxDriverEdges = 0)
       .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(byDoubling == fl)
+  }
+
+  /** 200x200 grid = 4x4 tiles of 64 px (the last tile column/row is 8
+    * cells wide). Base terrain: a NW-facing ramp with hash noise (long
+    * cross-tile paths to the grid edge, plus scattered pits). Carved
+    * in, strictly descending 10 per step and far below the terrain:
+    *  - a serpentine channel crossing tile borders 8 times;
+    *  - a diagonal channel through the tile corner (127,127)->(128,128)
+    *    that then runs down x = 128, the first column of its tiles;
+    *  - a zigzag alternating x = 127 / 128, crossing a border per step;
+    * with hash-scattered NoData cells, a rectangular hole and the whole
+    * tile (1, 2) missing. */
+  private lazy val multiTile: (Seq[(Long, Long, Double)], Seq[(Long, Long)]) = {
+    def run(x0: Int, y0: Int, x1: Int, y1: Int) =
+      if (y0 == y1) (x0 to x1 by (if (x1 >= x0) 1 else -1)).map(x => (x, y0))
+      else (y0 to y1 by (if (y1 >= y0) 1 else -1)).map(y => (x0, y))
+    val serpentine = (run(5, 20, 195, 20) ++ run(195, 21, 195, 90) ++
+      run(194, 90, 5, 90) ++ run(5, 91, 5, 170) ++ run(6, 170, 60, 170))
+      .map { case (x, y) => (x.toLong, y.toLong) }
+    val cornerEdge = ((0 to 28).map(t => (100 + t, 100 + t)) ++ run(128, 129, 128, 185))
+      .map { case (x, y) => (x.toLong, y.toLong) }
+    val zigzag = (0 to 30).map(k => ((127 + k % 2).toLong, (30 + k).toLong))
+    val channels = Seq(serpentine, cornerEdge, zigzag)
+    val carved = channels.flatMap(ch => ch.zipWithIndex.map { case (c, k) => c -> (-100.0 - 10.0 * k) }).toMap
+    val cells = for {
+      x <- 0L until 200L; y <- 0L until 200L
+      if carved.contains((x, y)) || !(
+        (x * 31 + y * 17) % 41 == 0 ||                   // scattered NoData
+          (x >= 150 && x <= 160 && y >= 140 && y <= 150) || // hole
+          (x / 64 == 1 && y / 64 == 2))                    // missing tile
+    } yield (x, y, carved.getOrElse((x, y),
+      1000.0 + 3.0 * (x + y) + ((x * 7919 + y * 104729 + 13) % 7)))
+    (cells, serpentine)
+  }
+
+  test("watershed + flow length: multi-tile distributed path equals the driver walk") {
+    val (cells, serpentine) = multiTile
+    val df = cells.toDF("x", "y", "v")
+    // the serpentine really crosses >= 8 tile borders, so its border
+    // chain needs >= 3 doubling rounds
+    val dir = dirs(cells, 200, 200)
+    val step = Hydrology.Dirs.map { case (dx, dy, c) => c.toLong -> (dx, dy) }.toMap
+    var cur = serpentine.head
+    var crossings = 0
+    while (dir(cur) != 0L) {
+      val (dx, dy) = step(dir(cur))
+      val nxt = (cur._1 + dx, cur._2 + dy)
+      if (nxt._1 / 64 != cur._1 / 64 || nxt._2 / 64 != cur._2 / 64) crossings += 1
+      cur = nxt
+    }
+    assert(crossings >= 8)
+    assert(cur == serpentine.last)
+    val keys = cells.map(c => (c._1, c._2))
+    def run(f: (org.apache.spark.sql.DataFrame, Long) => org.apache.spark.sql.DataFrame) = {
+      val rows = f(df, 0L).as[(Long, Long, Long)].collect()
+      assert(rows.length == keys.length && rows.map(r => (r._1, r._2)).toSet == keys.toSet)
+      val driver = f(df, 1L << 22).as[(Long, Long, Long)].collect().toSet
+      assert(rows.toSet == driver)
+      rows.map(r => (r._1, r._2) -> r._3).toMap
+    }
+    val basin = run((d, g) => Hydrology.watershed(d, 200, 200, maxDriverEdges = g))
+    val (px, py) = serpentine.last
+    assert(serpentine.forall(basin(_) == py * 200 + px))
+    val fl = run((d, g) => Hydrology.flowLength(d, 200, 200, maxDriverEdges = g))
+    assert(fl(serpentine.last) == 0L && fl(serpentine.head) > 8 * 64 * 1000000L)
   }
 
   test("strahler: two order-1 heads make an order-2 junction; single chains keep order") {
